@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.scratch import stage_once
-from python_etl_sample_spark.sources import table
+from python_etl_sample_spark.sources import raw_schema, table
 
 
 @query("scan_parquet", oracle="SELECT * FROM region")
@@ -206,7 +206,9 @@ def scan_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rollup is one partial-aggregated shuffle keyed by file, i.e.
     by input split. At 100 TB this is the audit query that verifies a
     backfill touched every file exactly once."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = spark.read.schema(raw_schema(spark, sf_dir, "orders")).parquet(
+        f"{sf_dir}/orders.parquet"
+    )
     return (
         o.select(
             F.col("_metadata.file_name").alias("file_name"),

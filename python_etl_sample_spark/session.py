@@ -16,8 +16,31 @@ cluster this would be set ≈ 2-3× total cores or left to AQE.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def _env_knob(name: str, default: str, pattern: str, expected: str) -> str:
+    """Value of env var ``name`` (``default`` when unset), stripped.
+
+    Raises ValueError naming the variable unless the value fully matches
+    ``pattern`` (case-insensitive), so a typo fails at import instead of
+    as an opaque conf error at session build or a silent coercion.
+    """
+    value = os.environ.get(name, default).strip()
+    if not re.fullmatch(pattern, value, re.IGNORECASE):
+        raise ValueError(f"{name}={value!r}: expected {expected}")
+    return value
+
+
+#: local[N] worker threads: ``*`` (all cores) or a positive integer
+_CPUS = _env_knob("SPARK_GRAFT_CPUS", "*", r"\*|[1-9][0-9]*", "'*' or a positive integer")
+
+#: driver JVM heap (in local mode also the executor's), a JVM size
+_DRIVER_MEM = _env_knob(
+    "SPARK_GRAFT_DRIVER_MEM", "8g", r"[1-9][0-9]*[kmgt]?", "a JVM size such as 2g or 8g"
+)
 
 #: r14 join posture (guide §3.1 / §9): allow the planner to pick a
 #: shuffled hash join when its size conditions hold instead of always
@@ -31,8 +54,11 @@ from pyspark.sql import SparkSession
 #: threshold is the memory-safety knob at scale (a build side above it
 #: keeps sort-merge's graceful spill); override via env for clusters
 #: with tighter executor memory.
-_SHJ_LOCAL_MAP_THRESHOLD = os.environ.get(
-    "SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", str(64 * 1024 * 1024)
+_SHJ_LOCAL_MAP_THRESHOLD = _env_knob(
+    "SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD",
+    str(64 * 1024 * 1024),
+    r"[0-9]+",
+    "an integer byte count >= 0",
 )
 
 #: The static-planner half of the same posture, env-overridable for the
@@ -40,17 +66,16 @@ _SHJ_LOCAL_MAP_THRESHOLD = os.environ.get(
 #: graceful spill when static size estimates are badly wrong, so a
 #: memory-tight cluster can restore sort-merge without editing source
 #: (SPARK_GRAFT_PREFER_SORT_MERGE_JOIN=true).
-_PREFER_SORT_MERGE_JOIN = os.environ.get(
-    "SPARK_GRAFT_PREFER_SORT_MERGE_JOIN", "false"
-)
+_PREFER_SORT_MERGE_JOIN = _env_knob(
+    "SPARK_GRAFT_PREFER_SORT_MERGE_JOIN", "false", r"true|false", "true or false"
+).lower()
 
 
 def get_spark(app_name: str = "python-etl-sample-spark") -> SparkSession:
     """Build (or get) a SparkSession configured for this engine."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
+        .master(f"local[{_CPUS}]")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
@@ -62,7 +87,7 @@ def get_spark(app_name: str = "python-etl-sample-spark") -> SparkSession:
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             _SHJ_LOCAL_MAP_THRESHOLD,
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", _DRIVER_MEM)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )
     return builder.getOrCreate()

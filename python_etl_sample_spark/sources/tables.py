@@ -11,16 +11,33 @@ TIMESTAMP_NTZ; no conversion). The loader branches on the LOADED type,
 not on an assumption about the file, so either vintage of fixture
 works unmodified.
 
+Schema memo: ``spark.read.parquet(path)`` without a schema runs a Spark
+job that reads the file footers to infer one, while the query is still
+being built. The loader does that once per file version in a process:
+``raw_schema`` keeps the inferred ``StructType`` keyed by the file's
+identity ``(abspath, st_ino, st_mtime_ns, st_size)``, and every read
+after the first supplies it (``spark.read.schema(s).parquet(path)``),
+which plans the same scan without the inference job. A rewritten file
+changes its identity and is inferred again. The memo holds file
+metadata only — about ten schemas, no rows, plans or persisted data —
+so results are still recomputed on every action. Paths that are not
+local regular files (directories, object-store URIs) bypass the memo
+and pay inference on each read; at that scale a catalog supplies the
+schema (SCALE.md "Loader").
+
 Scale note: loading is purely lazy — each table is a parquet scan plan,
-so Catalyst column-pruning/predicate-pushdown reach the scan. No
-caching or materialization happens here.
+so Catalyst column-pruning/predicate-pushdown reach the scan. No data is
+cached or materialized here.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from python_etl_sample_spark.session import ensure_session_configs
 
@@ -37,13 +54,43 @@ TABLE_NAMES = (
     "embeddings",
 )
 
+#: file identity -> schema Spark inferred for it. Two threads missing
+#: the same key at once both infer the same schema; the later store
+#: overwrites an equal value, so no lock is needed.
+_SCHEMAS: dict[tuple[str, int, int, int], StructType] = {}
+
+
+def _identity(path: str) -> tuple[str, int, int, int] | None:
+    """Memo key of a local regular file, or None when it cannot be memoized."""
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path (object-store URI) or missing
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (os.path.abspath(path), st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """Schema of ``{sf_dir}/{name}.parquet`` as Spark reads it, before
+    normalization; inferred at most once per file version (see module doc)."""
+    ensure_session_configs(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    key = _identity(path)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        if key is not None:
+            _SCHEMAS[key] = schema
+    return schema
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a lazy DataFrame, normalized."""
-    ensure_session_configs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    schema = raw_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        if isinstance(df.schema["ts"].dataType, LongType):
+        if isinstance(schema["ts"].dataType, LongType):
             # timestamp[ns] fixture read as bigint nanos (nanosAsLong)
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")

@@ -26,13 +26,13 @@ from pyspark.sql import functions as F
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.scratch import scratch_path, stage_once
 from python_etl_sample_spark.session import ensure_session_configs
+from python_etl_sample_spark.sources.tables import raw_schema
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet replayed as a streaming source (ts normalized to
     a watermarkable timestamp exactly as the batch loader does)."""
-    ensure_session_configs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = raw_schema(spark, sf_dir, "events")
     # the file stream source requires a directory; stage the events file
     # into scratch once (at 100 TB this would be the landing directory
     # new files arrive into)
@@ -43,14 +43,14 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.copyfile(f"{sf_dir}/events.parquet", f"{p}/events.parquet")
 
     src_dir = stage_once("stream_src", sf_dir, _stage)
-    stream = spark.readStream.schema(raw_schema).parquet(src_dir)
+    stream = spark.readStream.schema(schema).parquet(src_dir)
     # watermarks require TIMESTAMP (not NTZ); with the UTC session tz the
     # wall-clock values are identical to the batch loader's timestamp_ntz.
     # Branch on the LOADED ts type exactly as the batch loader does
     # (sources/tables.py): bigint = nanos fixture vintage, else native.
     from pyspark.sql.types import LongType
 
-    if isinstance(raw_schema["ts"].dataType, LongType):
+    if isinstance(schema["ts"].dataType, LongType):
         return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
@@ -622,25 +622,24 @@ def stream_demo_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFram
     (Delta/Iceberg); per-batch work is one map-side-combined groupBy of
     the BATCH (not history) joined against state — O(delta + state),
     never a rescan of the stream's past."""
-    ensure_session_configs(spark)
     import os
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = raw_schema(spark, sf_dir, "events")
     from pyspark.sql.types import LongType
 
     def _stage(p: str) -> None:
         os.makedirs(p, exist_ok=True)
-        spark.read.parquet(f"{sf_dir}/events.parquet").repartition(
-            4
-        ).write.mode("overwrite").parquet(p)
+        spark.read.schema(schema).parquet(
+            f"{sf_dir}/events.parquet"
+        ).repartition(4).write.mode("overwrite").parquet(p)
 
     src = stage_once("stream_src_fb4", sf_dir, _stage)
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    if isinstance(raw_schema["ts"].dataType, LongType):
+    if isinstance(schema["ts"].dataType, LongType):
         stream = stream.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000"))
         )

@@ -19,6 +19,7 @@ _FAST_MODULES = {
     "test_coverage",
     "test_determinism",
     "test_loader",
+    "test_session",
     "test_streaming_demo",
     "test_total_order",
     "test_rows_only_stability",
